@@ -60,34 +60,14 @@ def extract_text_from_html(html: bytes) -> str:
 
 # ----------------------------------------------------- text analysis
 
-# tiny per-language stopword signatures for the n-gram/stopword
-# heuristic language id (public-knowledge word lists)
+# tiny per-language stopword signatures (public-knowledge word lists):
+# the stopword-ratio quality signal and the stopword-overlap language id
 _LANG_MARKERS = {
     "en": {"the", "and", "of", "to", "in", "is", "that", "it", "for", "with"},
     "es": {"el", "la", "de", "que", "y", "en", "los", "se", "del", "las"},
     "de": {"der", "die", "und", "das", "ist", "von", "mit", "den", "nicht", "ein"},
     "fr": {"le", "la", "et", "les", "des", "est", "un", "une", "du", "dans"},
 }
-
-
-def lang_id(text: str) -> str:
-    """Stopword-overlap language id. Returns best marker language or
-    'und' when nothing matches."""
-    words = set(w.lower() for w in text.split()[:200])
-    best, best_hits = "und", 0
-    for lang in sorted(_LANG_MARKERS):
-        hits = len(words & _LANG_MARKERS[lang])
-        if hits > best_hits:
-            best, best_hits = lang, hits
-    return best
-
-
-# BPE-ish token estimate: word chunks + digit runs + punctuation singles
-_BPE_RE = re.compile(r"[A-Za-z]{1,8}|[0-9]{1,3}|[^\sA-Za-z0-9]")
-
-
-def bpe_token_count(text: str) -> int:
-    return len(_BPE_RE.findall(text))
 
 
 def quality_score_cols(text_col: str = "text") -> list[Column]:
@@ -116,22 +96,6 @@ def quality_score_cols(text_col: str = "text") -> list[Column]:
         (n_stop / F.greatest(n_words, F.lit(1))).alias("stopword_ratio"),
         (n_distinct / F.greatest(n_words, F.lit(1))).alias("distinct_ratio"),
     ]
-
-
-def rolling_fingerprint(text: str, window: int = 64, mod: int = 1 << 61 - 1) -> int:
-    """Deterministic rolling-hash document fingerprint (Karp-Rabin
-    over bytes, folded)."""
-    h = 0
-    acc = 0
-    base = 1000003
-    data = text.encode("utf-8", errors="replace")
-    pw = pow(base, window - 1, mod)
-    for i, b in enumerate(data):
-        acc = (acc * base + b) % mod
-        if i >= window - 1:
-            h ^= acc
-            acc = (acc - data[i - window + 1] * pw) % mod
-    return (h + len(data)) % mod
 
 
 # ------------------------------------------------- time-frame parsing

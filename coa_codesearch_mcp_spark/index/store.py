@@ -30,41 +30,22 @@ Scale design (the parts that matter at 10^12 docs / 1000 executors):
 
 from __future__ import annotations
 
-import math
 import os
 import time
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..analysis.chains import FIELD_PATTERNS
+from ..analysis.udfs import GROUPED_TOKENS_ARROW_SCHEMA
 from ..query.bm25 import idf_py
 from .build import tokenize_docs
-from .codec import BLOCK_SIZE, encode_blocks, varint_encode
+from .codec import POSTING_ARROW_SCHEMA, encode_partition
 from .manifest import Manifest
 
-POSTING_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("salt", T.IntegerType(), False),
-        T.StructField("range_id", T.LongType(), False),
-        T.StructField("block_no", T.IntegerType(), False),
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("last_doc", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("doc_gaps", T.BinaryType(), False),
-        T.StructField("tfs", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
-        T.StructField("pos_blob", T.BinaryType(), True),
-        T.StructField("max_tf", T.IntegerType(), False),
-        T.StructField("ub", T.DoubleType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-    ]
-)
+POSTING_SCHEMA = from_arrow_schema(POSTING_ARROW_SCHEMA)
 
 
 @dataclass
@@ -390,12 +371,16 @@ class IndexWriter:
             return n_dirs
         return min(n_dirs, max(1, -(-total // self.TOKENS_PER_ENCODE_TASK)))
 
+    def _read(self, table: str, schema: str) -> DataFrame:
+        """One of this index's tables, read with its known schema: no
+        footer-inference job per read."""
+        return self.spark.read.schema(schema).parquet(os.path.join(self.root, table))
+
     def dictionary_stage(self) -> None:
         if "dictionary" in self.manifest.completed_units("dictionary"):
             return
         cfg = self.cfg
-        tokens = self.spark.read.parquet(os.path.join(self.root, "tokens"))
-        doclens = self.spark.read.parquet(os.path.join(self.root, "doclens"))
+        tokens = self._read("tokens", GROUPED_TOKENS_ARROW_SCHEMA)
         dictionary = (
             tokens.select(F.explode("tokens").alias("tok"))
             .groupBy(F.col("tok.term").alias("term"))
@@ -439,6 +424,7 @@ class IndexWriter:
         # legacy lineage without the metrics.
         n_docs, total_tokens = self._wave_totals()
         if n_docs == 0:
+            doclens = self.spark.read.parquet(os.path.join(self.root, "doclens"))
             stats = doclens.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("dl").alias("total_tokens"),
@@ -461,84 +447,13 @@ class IndexWriter:
 
     # ----------------------------------------------- stage 3: postings
 
-    def postings_stage(self) -> None:
+    def _encode_plan(self, buckets: list[int]) -> DataFrame:
+        """Encoded posting blocks of the given buckets (not yet written)."""
         cfg = self.cfg
         corpus = self.manifest.get_stats("corpus")
-        n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-        done = {int(u) for u in self.manifest.completed_units("postings")}
-        todo = [b for b in range(cfg.n_buckets) if b not in done]
-        if not todo:
-            return
-
-        tokens = self.spark.read.parquet(os.path.join(self.root, "tokens"))
-        dictionary = self.spark.read.parquet(os.path.join(self.root, "dictionary"))
-
-        range_size = cfg.range_size
-        with_pos = cfg.with_positions
-
-        def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            """One (term, salt) posting sub-list -> encoded block rows.
-            Blocks are built per range_id so they never cross ranges.
-            NO df/idf here: the stored block-max ub is idf-free (see
-            codec.encode_blocks), so the encode shuffle carries no
-            dictionary state at all."""
-            out_rows = []
-            term = pdf["term"].iloc[0]
-            salt = int(pdf["salt"].iloc[0])
-            bucket = int(pdf["bucket"].iloc[0])
-            pdf = pdf.sort_values("doc_id")
-            for range_id, grp in pdf.groupby("range_id", sort=True):
-                doc_ids = grp["doc_id"].to_numpy(np.int64)
-                tfs = grp["tf"].to_numpy(np.int64)
-                dls = grp["dl"].to_numpy(np.float64)
-                blocks = encode_blocks(doc_ids, tfs, dls, avgdl)
-                if with_pos:
-                    positions = grp["positions"].tolist()
-                for bi, blk in enumerate(blocks):
-                    blk["dls"] = varint_encode(
-                        grp["dl"].to_numpy(np.uint64)[
-                            bi * BLOCK_SIZE : (bi + 1) * BLOCK_SIZE
-                        ]
-                    )
-                    if with_pos:
-                        deltas = []
-                        for plist in positions[bi * BLOCK_SIZE : (bi + 1) * BLOCK_SIZE]:
-                            arr = np.asarray(plist, dtype=np.int64)
-                            d = np.empty(len(arr), dtype=np.uint64)
-                            if len(arr):
-                                d[0] = arr[0] + 1
-                                d[1:] = np.diff(arr)
-                            deltas.append(d)
-                        blk["pos_blob"] = varint_encode(
-                            np.concatenate(deltas) if deltas else np.empty(0, np.uint64)
-                        )
-                    else:
-                        blk["pos_blob"] = None
-                    out_rows.append(
-                        {
-                            "term": term,
-                            "salt": salt,
-                            "range_id": int(range_id),
-                            "bucket": bucket,
-                            **blk,
-                        }
-                    )
-            return pd.DataFrame(
-                out_rows,
-                columns=[f.name for f in POSTING_SCHEMA.fields],
-            )
-
-        exploded = tokens.select(
-            "doc_id",
-            "dl",
-            F.explode("tokens").alias("tok"),
-        ).select(
-            "doc_id",
-            "dl",
-            F.col("tok.term").alias("term"),
-            F.col("tok.tf").alias("tf"),
-            F.col("tok.positions").alias("positions"),
-        )
+        avgdl = corpus["avgdl"]
+        tokens = self._read("tokens", GROUPED_TOKENS_ARROW_SCHEMA)
+        dictionary = self._read("dictionary", "term string, df long, n_salts int")
         # dl rides in the row — no doclens join on the build path.
         # Dictionary state on the build side is ONLY the hot-term salt
         # map (df > salt_threshold => n_salts > 1): tiny by
@@ -549,32 +464,46 @@ class IndexWriter:
         # shuffle.
         hot = dictionary.filter(F.col("n_salts") > 1).select("term", "n_salts")
         bucket_col = F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)).cast("int")
-        base = (
-            exploded.filter(bucket_col.isin(todo))
-            .join(F.broadcast(hot), "term", "left")
-            .withColumn("n_salts", F.coalesce("n_salts", F.lit(1)))
-            .withColumn("bucket", bucket_col)
-            .withColumn(
-                "range_id", F.expr(f"CAST(doc_id DIV {range_size} AS LONG)")
-            )
-            .withColumn(
-                "salt", F.pmod(F.col("range_id"), F.col("n_salts")).cast("int")
-            )
-        )
-        cols = ["term", "salt", "bucket", "range_id", "doc_id", "tf", "dl"]
-        if with_pos:
+        range_col = F.expr(f"CAST(doc_id DIV {cfg.range_size} AS LONG)")
+        cols = [
+            "term",
+            F.pmod(range_col, F.coalesce("n_salts", F.lit(1))).cast("int").alias("salt"),
+            bucket_col.alias("bucket"),
+            range_col.alias("range_id"),
+            "doc_id",
+            "tf",
+            "dl",
+        ]
+        if cfg.with_positions:
             cols.append("positions")
-        t0 = time.perf_counter()
-        # THE salted repartition-by-term shuffle. The explicit
-        # repartition pins the reducer count at 2x effective cores so
-        # AQE's byte-based coalescing can't shrink the Python-UDF
-        # encode stage (encode cost is CPU per group, not bytes);
-        # groupBy on the same keys reuses the partitioning — one
-        # shuffle total. Round-6: scale-adaptive like the tokenize
-        # stage — sized to the corpus token volume (already measured
-        # by the dictionary stage's Observation, so the hint is free),
-        # capped at 2x effective cores. A micro-batch delta encodes in
-        # one task; a web-scale corpus still saturates the cluster.
+        base = (
+            tokens.select("doc_id", "dl", F.explode("tokens").alias("tok"))
+            .select(
+                "doc_id",
+                "dl",
+                F.col("tok.term").alias("term"),
+                F.col("tok.tf").alias("tf"),
+                F.col("tok.positions").alias("positions"),
+            )
+            .filter(bucket_col.isin(buckets))
+            .join(F.broadcast(hot), "term", "left")
+            .select(*cols)
+        )
+        # THE salted repartition-by-term shuffle, the only one before
+        # the encode. The explicit repartition pins the reducer count
+        # so AQE's byte-based coalescing can't shrink the Python encode
+        # stage. Scale-adaptive like the tokenize stage: sized to the
+        # corpus token volume (already measured by the dictionary
+        # stage's Observation, so the hint is free), capped at 2x
+        # effective cores — the encode kernel's cost is a few numpy
+        # passes per Arrow batch, linear in tokens. A micro-batch delta
+        # encodes in one task; a web-scale corpus still saturates the
+        # cluster. Each task sorts its partition by (term, salt,
+        # doc_id) so every (term, salt, range_id) posting list is
+        # contiguous, and codec.encode_partition streams the batches.
+        # NO df/idf here: the stored block-max ub is idf-free (see
+        # codec.encode_postings), so the encode carries no dictionary
+        # state at all.
         n_enc = cfg.encode_tasks or 2 * self.spark.sparkContext.defaultParallelism
         if cfg.encode_tasks is None:
             total_tokens = int(corpus.get("total_tokens") or 0)
@@ -583,12 +512,19 @@ class IndexWriter:
                     n_enc,
                     max(1, -(-total_tokens // self.TOKENS_PER_ENCODE_TASK)),
                 )
-        encoded = (
-            base.select(*cols)
-            .repartition(n_enc, "term", "salt")
-            .groupBy("term", "salt")
-            .applyInPandas(encode_group, POSTING_SCHEMA)
+        return (
+            base.repartition(n_enc, "term", "salt")
+            .sortWithinPartitions("term", "salt", "doc_id")
+            .mapInArrow(lambda it: encode_partition(it, avgdl), POSTING_SCHEMA)
         )
+
+    def postings_stage(self) -> None:
+        done = {int(u) for u in self.manifest.completed_units("postings")}
+        todo = [b for b in range(self.cfg.n_buckets) if b not in done]
+        if not todo:
+            return
+        t0 = time.perf_counter()
+        encoded = self._encode_plan(todo)
         # idempotent on resume: a crashed postings wave's bucket dirs
         # are dropped before re-append (see _clear_stale_partitions).
         # Block count rides the write as an Observation so the final
@@ -722,6 +658,9 @@ class IndexWriter:
 class IndexReader:
     """Query-side access: pruned posting reads + corpus stats."""
 
+    # term-cache entries kept before the cache is cleared
+    TERM_CACHE_MAX = 65536
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
@@ -775,8 +714,10 @@ class IndexReader:
         constructed before an in-place rebuild kept serving the OLD
         n_docs/avgdl/field against freshly re-read dictionary/postings
         parquet — mixed-snapshot BM25 scores (round-4 ADVICE). The
-        parquet sides need no action: dictionary()/postings reads are
-        path-based and re-planned per query."""
+        reload also drops the term cache and the memoized
+        dictionary()/postings_df() relations, whose file listings are
+        pinned per snapshot: a reader that never calls this keeps
+        reading the listing of the snapshot it opened."""
         current = self._manifest_mtime_ns()
         if current != self._snapshot_mtime_ns:
             self._load_snapshot()
@@ -816,9 +757,13 @@ class IndexReader:
         from .hashing import term_bucket
 
         uniq = sorted(set(terms))
-        missing = [t for t in uniq if t not in self._term_cache]
+        # read hits into a local dict BEFORE a possible cache clear, so
+        # a term counted as cached is never read back from the emptied
+        # cache
+        got = {t: self._term_cache[t] for t in uniq if t in self._term_cache}
+        missing = [t for t in uniq if t not in got]
         if missing:
-            if len(self._term_cache) > 65536:
+            if len(self._term_cache) > self.TERM_CACHE_MAX:
                 self._term_cache.clear()  # bounded driver memory
             buckets = sorted({term_bucket(t, self.n_buckets) for t in missing})
             rows = (
@@ -837,8 +782,8 @@ class IndexReader:
                 for r in rows
             }
             for t in missing:
-                self._term_cache[t] = found.get(t)
-        return {t: self._term_cache[t] for t in uniq if self._term_cache[t] is not None}
+                got[t] = self._term_cache[t] = found.get(t)
+        return {t: got[t] for t in uniq if got[t] is not None}
 
     def postings_blocks(
         self, terms: list[str], columns: list[str] | None = None

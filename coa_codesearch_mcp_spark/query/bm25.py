@@ -56,11 +56,6 @@ def contrib_py(tf: float, df: int, dl: float, n_docs: int, avgdl: float) -> floa
     )
 
 
-def max_contrib_py(df: int, n_docs: int) -> float:
-    """Upper bound of a term's contribution: tfn < k1 + 1."""
-    return idf_py(df, n_docs) * (K1 + 1.0)
-
-
 BM25_SQL_DOC = """
 -- ANSI-SQL twin of the formula, for DuckDB oracles:
 -- ln(1 + (N - df + 0.5) / (df + 0.5))

@@ -44,7 +44,7 @@ class TermCursor:
     decoded_blocks: int = 0
 
     def __post_init__(self):
-        # stored block ub is idf-FREE (codec.encode_blocks: max tfn);
+        # stored block ub is idf-FREE (codec.encode_postings: max tfn);
         # the cursor owns the term's idf, so bounds are idf * ub here
         self.term_ub = (
             self.idf * max(b["ub"] for b in self.blocks) if self.blocks else 0.0

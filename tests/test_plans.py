@@ -196,3 +196,52 @@ def test_store_phrase_plan_no_global_window(spark, documents, tmp_path, no_aqe):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
     assert "ReusedExchange" in plan, plan
     assert len(df.collect()) >= 0
+
+
+def _postings_writer(spark, documents, root, **kw):
+    """A store writer whose tokens and dictionary stages are done."""
+    from coa_codesearch_mcp_spark.index.store import IndexConfig, IndexWriter
+
+    cfg = IndexConfig(
+        field="content_patterns", n_buckets=4, range_size=128, chunk_size=256,
+        salt_threshold=50, max_salts=4, **kw,
+    )
+    w = IndexWriter(spark, root, cfg)
+    w.tokenize_stage(documents.limit(200))
+    w.dictionary_stage()
+    return w
+
+
+def test_postings_encode_plan_one_shuffle(spark, documents, tmp_path, no_aqe):
+    """The posting encode is one Arrow partition kernel behind exactly
+    one (term, salt) shuffle: no per-group pandas call."""
+    import re
+
+    # two encode tasks: one task would plan a SinglePartition exchange
+    w = _postings_writer(spark, documents, str(tmp_path / "ix_enc_plan"), encode_tasks=2)
+    plan = w._encode_plan([0, 1, 2, 3])._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    exchanges = re.findall(r"\+- Exchange (.*)", plan)
+    assert len(exchanges) == 1, plan
+    assert re.match(r"hashpartitioning\(term#\d+, salt#\d+, 2\)", exchanges[0]), plan
+    # the shuffle feeds the kernel (a child prints below its parent)
+    assert plan.index("MapInArrow") < plan.index("Exchange hashpartitioning"), plan
+
+
+# Spark jobs IndexWriter.postings_stage may launch (AQE on): the
+# tag-and-count method of test_query_cache. The applyInPandas encoder
+# launched 6; reading the tokens and dictionary tables with their known
+# schemas dropped the two footer-inference jobs.
+POSTINGS_STAGE_JOBS = 4
+
+
+def test_postings_stage_job_budget(spark, documents, tmp_path):
+    w = _postings_writer(spark, documents, str(tmp_path / "ix_enc_jobs"))
+    sc = spark.sparkContext
+    sc.setJobGroup("postings_budget", "postings stage")
+    try:
+        w.postings_stage()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("postings_budget")
+    assert 0 < len(jobs) <= POSTINGS_STAGE_JOBS, sorted(jobs)

@@ -91,6 +91,17 @@ def test_store_phrase_matches_logical(store, logical, documents_rows):
     assert got2 == want2
 
 
+def test_lookup_terms_mixed_hit_at_cache_bound(spark, index_root):
+    """A lookup mixing a cached term with a new one at the cache bound
+    clears the cache mid-call; the cached term must still be returned."""
+    reader = IndexReader(spark, index_root)
+    reader.TERM_CACHE_MAX = 1
+    assert set(reader.lookup_terms(["spark", "zzz_absent_term"])) == {"spark"}
+    got = reader.lookup_terms(["spark", "stream"])
+    assert set(got) == {"spark", "stream"}
+    assert got["spark"]["df"] > 0 and got["stream"]["df"] > 0
+
+
 def test_wand_prunes_blocks(store):
     """Single-node check on real index data: WAND decodes fewer blocks
     than exist once the heap fills."""

@@ -22,7 +22,7 @@ import numpy as np
 import pytest
 
 from coa_codesearch_mcp_spark.index.build import build_logical_index
-from coa_codesearch_mcp_spark.index.codec import BLOCK_SIZE, encode_blocks, varint_encode
+from coa_codesearch_mcp_spark.index.codec import encode_blocks
 from coa_codesearch_mcp_spark.index.store import IndexConfig, IndexReader, IndexWriter
 from coa_codesearch_mcp_spark.query.bm25 import idf_py
 from coa_codesearch_mcp_spark.query.executor import Searcher
@@ -39,15 +39,7 @@ AVGDL = 160.0
 
 
 def _blocks(doc_ids, tfs, dls):
-    docs = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
-    rows = encode_blocks(docs, tfs, dls.astype(np.float64), avgdl=AVGDL)
-    for bi, blk in enumerate(rows):
-        blk["dls"] = varint_encode(
-            dls.astype(np.uint64)[bi * BLOCK_SIZE : (bi + 1) * BLOCK_SIZE]
-        )
-    return rows
+    return encode_blocks(doc_ids, tfs, dls, avgdl=AVGDL)
 
 
 @pytest.fixture(scope="module")

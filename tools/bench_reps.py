@@ -21,11 +21,13 @@ def main() -> None:
     reps = int(sys.argv[2])
     out_path = sys.argv[3] if len(sys.argv) > 3 else None
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # one Spark task slot per core this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
     samples = []
     for i in range(reps):
         load1 = os.getloadavg()[0]
-        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
+        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=cpus)
         p = subprocess.run(
             [sys.executable, os.path.join(repo, "bench.py")],
             env=env, capture_output=True, text=True,

@@ -91,12 +91,26 @@ print(json.dumps({"cores": cores, "n_docs": n, "secs": round(dt, 3),
 """
 
 
+def default_driver_mem() -> str:
+    """Half the memory available now, capped at 24 GB: the heap of one
+    level's JVM must fit beside its Python workers."""
+    avail = os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail = int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return f"{max(1, min(24, avail // (2 << 30)))}g"
+
+
 def run_level(cores: int, n_docs: int, out_root: str, rep: int) -> dict:
     env = dict(os.environ)
     # local mode = single JVM; heap must cover concurrent task memory
     # at the LARGER core count (on a real cluster this is per-executor
     # memory and does not change with cluster size)
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
     out = subprocess.run(
         [sys.executable, "-c", WORKER, str(cores), str(n_docs), out_root, str(rep)],
         capture_output=True, text=True, env=env, timeout=3600,
@@ -106,17 +120,17 @@ def run_level(cores: int, n_docs: int, out_root: str, rep: int) -> dict:
 
 
 def main() -> None:
-    # N=2 vs 4N=8 by default: Arrow-UDF stages run N JVM task threads
-    # PLUS N python workers concurrently, so the large level must stay
-    # well under the box's 32 hardware threads or the harness itself
-    # (single-JVM thread doubling a real 4N-executor cluster never
-    # sees) throttles it: local[16] already runs ~32 concurrent
-    # threads = saturated, local[8] runs 16 = headroom. 2-vs-8 keeps
-    # BOTH levels unsaturated; the rule only fixes the RATIO at 4x.
+    # N = cores / 4 by default, so the large level 4N uses the cores
+    # this process may run on (local[1] vs local[4] on a 4-core box).
+    # Arrow-UDF stages run N JVM task threads PLUS N python workers
+    # concurrently, so a larger 4N oversubscribes the box and the
+    # harness itself (single-JVM thread doubling a real 4N-executor
+    # cluster never sees) throttles it; the rule only fixes the RATIO
+    # at 4x.
     # 480k docs so per-level fixed costs (~5 s) stay <5% of the small
     # level's wall time.
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 480_000
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    n = int(sys.argv[2]) if len(sys.argv) > 2 else max(1, len(os.sched_getaffinity(0)) // 4)
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     out_root = "/tmp/spark_graft_scaling"
     os.makedirs(out_root, exist_ok=True)
