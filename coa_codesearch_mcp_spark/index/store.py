@@ -716,8 +716,9 @@ class IndexReader:
         parquet — mixed-snapshot BM25 scores (round-4 ADVICE). The
         reload also drops the term cache and the memoized
         dictionary()/postings_df() relations, whose file listings are
-        pinned per snapshot: a reader that never calls this keeps
-        reading the listing of the snapshot it opened."""
+        pinned per snapshot. lookup_terms() (and so postings_blocks())
+        calls this before it plans a read, so a query never reads the
+        listing of a snapshot that has moved."""
         current = self._manifest_mtime_ns()
         if current != self._snapshot_mtime_ns:
             self._load_snapshot()
@@ -753,9 +754,10 @@ class IndexReader:
         bit-identical to the JVM), so the read prunes to the query
         terms' directory partitions and the term-sorted files prune
         row groups on the term predicate — no job launch, no full
-        dictionary scan."""
+        dictionary scan. Reloads first if the snapshot moved."""
         from .hashing import term_bucket
 
+        self.refresh_if_changed()
         uniq = sorted(set(terms))
         # read hits into a local dict BEFORE a possible cache clear, so
         # a term counted as cached is never read back from the emptied
@@ -795,7 +797,8 @@ class IndexReader:
         PHRASE_BLOCK_COLUMNS) so the parquet scan never reads posting
         columns the consumer ignores — parquet is columnar, the
         pruning is free, and the non-phrase scatter stops shipping the
-        positions blob through Arrow (round-5 VERDICT #1)."""
+        positions blob through Arrow (round-5 VERDICT #1). The lookup
+        reloads a moved snapshot before the scan is planned."""
         info = self.lookup_terms(terms)
         buckets = sorted({v["bucket"] for v in info.values()})
         if not buckets:

@@ -10,6 +10,33 @@ import os
 
 from pyspark.sql import SparkSession
 
+WORKER_DAEMON = "coa_codesearch_mcp_spark.worker_daemon"
+STOCK_DAEMON = "pyspark.daemon"
+
+
+def python_daemon_module(
+    master: str, cwd: str | None = None, pythonpath: str | None = None
+) -> str:
+    """The ``spark.python.daemon.module`` for a session on ``master``.
+
+    The package's worker daemon (see ``worker_daemon``) when the master
+    is ``local[...]`` and the package's parent directory is on the
+    daemon's import path: the working directory the JVM launches it
+    from (``cwd``, default the current one) or an entry of
+    ``PYTHONPATH`` (default the current environment's), both of which
+    the daemon inherits. The daemon starts before any ``--py-files``
+    reach a worker, so everywhere else (a cluster master, or a package
+    only shipped as a zip) it is Spark's stock daemon."""
+    if master != "local" and not master.startswith("local["):
+        return STOCK_DAEMON
+    if pythonpath is None:
+        pythonpath = os.environ.get("PYTHONPATH", "")
+    parent = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    paths = [cwd or os.getcwd()] + [p for p in pythonpath.split(os.pathsep) if p]
+    if any(os.path.realpath(p) == parent for p in paths):
+        return WORKER_DAEMON
+    return STOCK_DAEMON
+
 
 def get_spark(
     app_name: str = "coa_codesearch_mcp_spark",
@@ -21,6 +48,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or all cores).
     ``shuffle_partitions`` defaults to the core count — at cluster
     scale you would size this to ~2-3x total executor cores instead.
+    Python workers start from ``python_daemon_module(master)``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -60,6 +88,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", python_daemon_module(master))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -339,32 +339,32 @@ class DeltaIndexManager:
             F.col("issued_delta").isin(committed)
         ).select("doc_id", "upto_seg", "issued_delta")
 
-    def _reader_for(self, root: str) -> IndexReader:
-        """Segment readers are cached per root and refreshed by
-        snapshot token (one os.stat): round-6 — constructing a fresh
-        IndexReader per segment per query re-parsed manifests and
-        re-launched partition-discovery jobs for tables that are
-        immutable under their snapshot."""
-        cache = getattr(self, "_seg_readers", None)
-        if cache is None:
-            cache = self._seg_readers = {}
-        r = cache.get(root)
-        if r is None:
-            r = cache[root] = IndexReader(self.spark, root)
-        else:
-            r.refresh_if_changed()
-        return r
-
     def segments(self) -> list[tuple[int, IndexReader]]:
-        out = []
+        """(segment id, reader) of the committed segments. Readers are
+        cached per root and refreshed by snapshot token (one os.stat):
+        round-6 — constructing a fresh IndexReader per segment per
+        query re-parsed manifests and re-launched partition-discovery
+        jobs for tables that are immutable under their snapshot. The
+        cache keeps only the roots listed here: a retired delta or an
+        old main epoch drops its reader and memoized relations."""
+        roots = []
         main = self._main_root()
         if os.path.exists(os.path.join(main, "manifest.json")):
-            out.append((MAIN_SEG, self._reader_for(main)))
+            roots.append((MAIN_SEG, main))
         for d in self._delta_ids():
             r = self._delta_root(d)
             if os.path.exists(os.path.join(r, "manifest.json")):
-                out.append((d, self._reader_for(r)))
-        return out
+                roots.append((d, r))
+        old = getattr(self, "_seg_readers", {})
+        cache = self._seg_readers = {}
+        for _, root in roots:
+            r = old.get(root)
+            if r is None:
+                r = IndexReader(self.spark, root)
+            else:
+                r.refresh_if_changed()
+            cache[root] = r
+        return [(seg, cache[root]) for seg, root in roots]
 
     # ------------------------------------------------------ mutation
 

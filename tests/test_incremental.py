@@ -849,3 +849,25 @@ def test_phrase_and_expansions_match_fresh_rebuild(spark, tmp_path):
     got_delta = rows_of(mgr.search_wildcard("delt*"))
     assert got_delta == rows_of(fresh.search_wildcard("delt*"))
     assert len(got_delta) == 1
+
+
+def test_segment_reader_cache_holds_only_live_segments(spark, mgr):
+    """Readers of retired deltas and old main epochs are dropped: after
+    apply + query + compact cycles the cache holds exactly the roots of
+    the live segments."""
+    for i in range(3):
+        mgr.apply_batch(
+            _changes(
+                spark,
+                [(f"https://cyc.org/{i}.html", "upsert", f"cyclemarker c{i}", TS, TS)],
+            )
+        )
+        assert len(hits(mgr, ["cyclemarker"])) == i + 1
+        assert mgr.maybe_compact(delta_ratio=0.0) is True
+    mgr.apply_batch(
+        _changes(spark, [("https://cyc.org/last.html", "upsert", "cyclemarker", TS, TS)])
+    )
+    assert len(hits(mgr, ["cyclemarker"])) == 4
+    live = {mgr._main_root()} | {mgr._delta_root(d) for d in mgr._delta_ids()}
+    assert len(live) == 2
+    assert set(mgr._seg_readers) == live

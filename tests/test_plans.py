@@ -2,6 +2,8 @@
 100 TB, not just ones that pass (VERDICT round-1 'What's wrong' #2).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -215,7 +217,6 @@ def _postings_writer(spark, documents, root, **kw):
 def test_postings_encode_plan_one_shuffle(spark, documents, tmp_path, no_aqe):
     """The posting encode is one Arrow partition kernel behind exactly
     one (term, salt) shuffle: no per-group pandas call."""
-    import re
 
     # two encode tasks: one task would plan a SinglePartition exchange
     w = _postings_writer(spark, documents, str(tmp_path / "ix_enc_plan"), encode_tasks=2)
@@ -245,3 +246,70 @@ def test_postings_stage_job_budget(spark, documents, tmp_path):
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("postings_budget")
     assert 0 < len(jobs) <= POSTINGS_STAGE_JOBS, sorted(jobs)
+
+
+# Python operators in the executed plan of each query shape (AQE off).
+# Each costs one Python worker setup per partition it runs on, so a new
+# one shows up here instead of as query latency. A phrase runs its
+# candidate UDF once per consumer (the df aggregate and the scoring
+# side).
+PYTHON_OPS = re.compile(
+    r"\b(MapInArrow|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas"
+    r"|ArrowEvalPython|BatchEvalPython)\b"
+)
+STORE_PYTHON_OPS = {"term": 1, "and": 1, "or": 1, "not": 1, "phrase": 2}
+LIVE_PYTHON_OPS = {"or": 1, "and": 1, "phrase": 2}
+
+
+def _python_ops(df) -> int:
+    return len(PYTHON_OPS.findall(df._jdf.queryExecution().executedPlan().toString()))
+
+
+def test_store_query_python_op_budget(spark, documents, tmp_path, no_aqe):
+    from coa_codesearch_mcp_spark.index.store import (
+        IndexConfig,
+        IndexReader,
+        IndexWriter,
+    )
+    from coa_codesearch_mcp_spark.query.store_executor import StoreSearcher
+
+    root = str(tmp_path / "ix_pyops")
+    cfg = IndexConfig(
+        field="content_patterns", n_buckets=4, range_size=256, chunk_size=512,
+        salt_threshold=10_000,
+    )
+    IndexWriter(spark, root, cfg).build(documents.limit(200))
+    ss = StoreSearcher(IndexReader(spark, root))
+    got = {
+        "term": _python_ops(ss.search_term("spark", k=5)),
+        "and": _python_ops(ss.search_and(["spark", "stream"], k=5)),
+        "or": _python_ops(ss.search_or(["spark", "stream"], k=5)),
+        "not": _python_ops(ss.search_or(["spark"], k=5, exclude=["stream"])),
+        "phrase": _python_ops(ss.search_phrase(["fast", "key"], k=5)),
+    }
+    assert got == STORE_PYTHON_OPS
+
+
+def test_live_query_python_op_budget(spark, documents, tmp_path, no_aqe):
+    from coa_codesearch_mcp_spark.index.store import IndexConfig
+    from coa_codesearch_mcp_spark.streaming.incremental import (
+        DeltaIndexManager,
+        _url_doc_id,
+    )
+
+    cfg = IndexConfig(
+        field="content_patterns", n_buckets=4, range_size=1 << 58,
+        chunk_size=1 << 58, chunks_per_wave=32, salt_threshold=10_000,
+    )
+    docs = documents.limit(60).select(
+        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
+        "text",
+    ).withColumn("doc_id", _url_doc_id())
+    mgr = DeltaIndexManager(spark, str(tmp_path / "inc_pyops"), cfg)
+    mgr.init_main(docs)
+    got = {
+        "or": _python_ops(mgr.search_or(["spark", "stream"], k=5)),
+        "and": _python_ops(mgr.search_and(["spark", "stream"], k=5)),
+        "phrase": _python_ops(mgr.search_phrase(["fast", "key"], k=5)),
+    }
+    assert got == LIVE_PYTHON_OPS

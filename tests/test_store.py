@@ -102,6 +102,34 @@ def test_lookup_terms_mixed_hit_at_cache_bound(spark, index_root):
     assert got["spark"]["df"] > 0 and got["stream"]["df"] > 0
 
 
+def test_reader_follows_in_place_rebuild(spark, documents, tmp_path):
+    """A reader that never calls refresh_if_changed answers lookups and
+    block reads from the current snapshot after an in-place rebuild,
+    not from the term cache and file listing of the one it opened."""
+    import shutil
+
+    root = str(tmp_path / "ix_rebuilt")
+    cfg = IndexConfig(
+        field="content_patterns", n_buckets=4, range_size=256, chunk_size=512,
+        salt_threshold=10_000,
+    )
+    terms = ["spark", "stream"]
+    cols = ["term", "salt", "range_id", "block_no", "first_doc", "n", "ub"]
+
+    def blocks(reader):
+        return sorted(tuple(r) for r in reader.postings_blocks(terms, cols)[0].collect())
+
+    IndexWriter(spark, root, cfg).build(documents.limit(100))
+    old = IndexReader(spark, root)
+    before = blocks(old)
+    shutil.rmtree(root)
+    IndexWriter(spark, root, cfg).build(documents.limit(300))
+    new = IndexReader(spark, root)
+    assert old.lookup_terms(terms) == new.lookup_terms(terms)
+    assert blocks(old) == blocks(new) != before
+    assert old.n_docs == new.n_docs == 300
+
+
 def test_wand_prunes_blocks(store):
     """Single-node check on real index data: WAND decodes fewer blocks
     than exist once the heap fills."""

@@ -20,13 +20,15 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import json, os, shutil, sys, time
-sys.path.insert(0, "/root/repo")
 cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); out_root = sys.argv[3]
 from pyspark.sql import SparkSession, functions as F
 from coa_codesearch_mcp_spark.fixtures.webgen import generate_webpages
 from coa_codesearch_mcp_spark.index.store import IndexConfig, IndexWriter
+from coa_codesearch_mcp_spark.session import python_daemon_module
 
 # ParallelGC: measurably faster + steadier than G1 for this batch
 # workload (array-heavy parquet writes) in a single JVM
@@ -35,8 +37,9 @@ from coa_codesearch_mcp_spark.index.store import IndexConfig, IndexWriter
 # level), not derived from the current core count — exactly how the
 # same spark-submit job behaves on N vs 4N executors.
 plan_tasks = int(os.environ.get("SPARK_GRAFT_PLAN_TASKS", "32"))
+master = f"local[{cores}]"
 spark = (
-    SparkSession.builder.master(f"local[{cores}]")
+    SparkSession.builder.master(master)
     .appName(f"scale{cores}")
     .config("spark.sql.shuffle.partitions", str(plan_tasks))
     .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
@@ -45,6 +48,9 @@ spark = (
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
     .config("spark.ui.enabled", "false")
+    # the Python worker daemon get_spark ships, so the ratio measures
+    # the engine's own worker path
+    .config("spark.python.daemon.module", python_daemon_module(master))
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
@@ -111,6 +117,8 @@ def run_level(cores: int, n_docs: int, out_root: str, rep: int) -> dict:
     # at the LARGER core count (on a real cluster this is per-executor
     # memory and does not change with cluster size)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
+    # the package on the driver's and the Python workers' import path
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, env.get("PYTHONPATH")) if p)
     out = subprocess.run(
         [sys.executable, "-c", WORKER, str(cores), str(n_docs), out_root, str(rep)],
         capture_output=True, text=True, env=env, timeout=3600,
@@ -175,8 +183,8 @@ def main() -> None:
         "rule": "throughput(4N) / (4 * throughput(N)) >= 0.8",
     }
     print(json.dumps(result))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
         json.dump(result, f, indent=1)
 
 

@@ -11,6 +11,10 @@ On a cluster the SparkSession comes from spark-submit's conf (master,
 executors); locally it falls back to local[*]. The build is resumable:
 re-running with the same --output skips completed chunk waves via the
 manifest.
+
+Python workers run Spark's stock daemon, not the package's
+(``session.python_daemon_module``): the daemon starts before the
+``--py-files`` zip reaches a worker, so it could not import the package.
 """
 
 from __future__ import annotations

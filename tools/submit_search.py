@@ -7,6 +7,10 @@
         --query "spark index" [--mode or|and|phrase] [--k 10]
 
 Prints one JSON line: the top-k (doc_id, score) plus query wall time.
+
+Python workers run Spark's stock daemon, not the package's
+(``session.python_daemon_module``): the daemon starts before the
+``--py-files`` zip reaches a worker, so it could not import the package.
 """
 
 from __future__ import annotations
